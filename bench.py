@@ -33,6 +33,15 @@ projection-only work), no driver-side result transfer. Usage:
 Every run stamps a contention probe (loadavg + a fixed
 single-threaded calibration loop) into the summary so a contended
 box can never masquerade as a code regression.
+
+Streaming queries (``stream_*`` and any other query that runs a
+Structured Streaming query) get a per-tick breakdown on the detail
+line, read from Spark's own ``StreamingQueryProgress`` reports by a
+``StreamingQueryListener``: ``notes[<query>]`` holds ``n_ticks`` and,
+one entry per micro-batch in batch order, ``trigger_ms``
+(triggerExecution), ``add_batch_ms`` (addBatch: the sink's work),
+``query_planning_ms`` (queryPlanning), ``source_ms`` (latestOffset +
+getBatch) and ``commit_ms`` (walCommit + commitOffsets).
 """
 
 from __future__ import annotations
@@ -40,7 +49,10 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -245,6 +257,59 @@ def _calibrate(rounds: int = 3) -> dict[str, float]:
     }
 
 
+#: notes field -> the durationMs phases it sums
+TICK_PHASES = {
+    "trigger_ms": ("triggerExecution",),
+    "add_batch_ms": ("addBatch",),
+    "query_planning_ms": ("queryPlanning",),
+    "source_ms": ("latestOffset", "getBatch"),
+    "commit_ms": ("walCommit", "commitOffsets"),
+}
+
+
+class TickLog(StreamingQueryListener):
+    """Keeps every StreamingQueryProgress report; ``take`` returns those
+    of the query runs started since the previous call, once each of
+    them has reported termination."""
+
+    def __init__(self) -> None:
+        self.started: set[str] = set()
+        self.terminated: set[str] = set()
+        self.progress: list = []
+        self.cond = threading.Condition()
+
+    def onQueryStarted(self, event) -> None:
+        with self.cond:
+            self.started.add(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        with self.cond:
+            self.progress.append(event.progress)
+
+    def onQueryTerminated(self, event) -> None:
+        with self.cond:
+            self.terminated.add(str(event.runId))
+            self.cond.notify_all()
+
+    def take(self, timeout: float = 60.0) -> list:
+        with self.cond:
+            ids = self.started
+            self.cond.wait_for(lambda: ids <= self.terminated, timeout)
+            mine = [p for p in self.progress if str(p.runId) in ids]
+            self.started, self.progress = set(), []
+        return sorted(mine, key=lambda p: p.timestamp)
+
+
+def _tick_notes(ticks: list) -> dict[str, object]:
+    """Per-tick Spark phases of one query's micro-batches."""
+    out: dict[str, object] = {"n_ticks": len(ticks)}
+    for field, phases in TICK_PHASES.items():
+        out[field] = [
+            sum(t.durationMs.get(k, 0) for k in phases) for t in ticks
+        ]
+    return out
+
+
 def main() -> None:
     from funding_monitoring_spark import registry
     from funding_monitoring_spark.operators.cachescope import (
@@ -313,9 +378,8 @@ def main() -> None:
         .awaitTermination()
     )
 
-    from funding_monitoring_spark.streaming import metrics
-
-    metrics.ENABLED = True  # per-tick attribution for stream_* sinks
+    tick_log = TickLog()
+    spark.streams.addListener(tick_log)
 
     load_start = os.getloadavg()[0]
     calib = _calibrate()
@@ -348,7 +412,7 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
             except Exception as exc:  # noqa: BLE001 — recorded
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                metrics.drain()
+                tick_log.take()
                 release_scoped_caches()
                 continue
             this_run[name] = round(time.perf_counter() - t0, 3)
@@ -356,21 +420,9 @@ def main() -> None:
             # materialized (outside the timed span) — a full-registry
             # run leaves no session-lifetime cached partitions
             release_scoped_caches()
-            ticks = metrics.drain()
+            ticks = tick_log.take()
             if ticks and run == 0:
-                # attribute the streaming wall: micro-batch work
-                # (merge + snapshot hook) vs trigger/checkpoint
-                # machinery (rest)
-                merge = sum(t.get("merge_sec", 0.0) for t in ticks)
-                hook = sum(t.get("hook_sec", 0.0) for t in ticks)
-                notes[name] = {
-                    "n_ticks": len(ticks),
-                    "merge_write_sec": round(merge, 3),
-                    "stats_recompute_sec": round(hook, 3),
-                    "trigger_checkpoint_overhead_sec": round(
-                        this_run[name] - merge - hook, 3
-                    ),
-                }
+                notes[name] = _tick_notes(ticks)
         wall_runs.append(round(time.perf_counter() - t_suite, 3))
         run_timings.append(this_run)
         run += 1
@@ -402,8 +454,10 @@ def main() -> None:
             overflow_timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # noqa: BLE001 — recorded, not hidden
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        metrics.drain()
         release_scoped_caches()
+        ticks = tick_log.take()
+        if ticks and name in overflow_timings:
+            notes[name] = _tick_notes(ticks)
     overflow_wall = round(time.perf_counter() - t_over, 3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -36,17 +36,6 @@ from pyspark.sql.window import Window
 
 DEFAULT_MAX_ITER = 20
 
-#: Size gate for partitioning the persisted edge frame by the
-#: round-join key (VERDICT r13 item 6). The symmetrize-distinct
-#: leaves edges hash-partitioned on (u, v), so every hash-min round
-#: re-shuffles the cached edge mass to join on u; one up-front
-#: repartition("u") lets each round reuse the edge-side exchange —
-#: measured −20% over 5 rounds on a synthetic 1.17M-edge graph (r13).
-#: Below the gate the extra exchange is pure cost: every registered
-#: consumer runs a TINY quotient/dedup graph where r13 measured it
-#: at ~+4% on the cluster family — so small graphs skip it.
-EDGE_REPARTITION_MIN = 1_000_000
-
 
 def connected_components(
     pairs: DataFrame,
@@ -83,16 +72,6 @@ def connected_components(
         .persist()
     )
     try:
-        # size-gated round-join partitioning (see EDGE_REPARTITION_MIN)
-        # — the count runs over the persisted frame, materializing a
-        # cache round 1 would materialize anyway
-        if edges.count() >= EDGE_REPARTITION_MIN:
-            spread = edges.repartition("u").persist()
-            try:
-                spread.count()
-            finally:
-                edges.unpersist()
-            edges = spread
         labels = (
             edges.select(F.col("u").alias("id"))
             .distinct()

@@ -15,8 +15,8 @@ fan-out — the one real data dependency between tasks,
 funding_rates_etl.py:23-30) and the stats snapshot over the funding
 store. ``run_main_dag`` reproduces that graph as ONE driver program:
 each task materializes its table store exactly as its reference task
-does (full-replace snapshots for futures/spot, append for lending,
-PK-upsert for funding, overwrite for stats), and the run returns a
+does (full-replace snapshots for futures/spot, PK-upsert for lending
+and funding, overwrite for stats), and the run returns a
 per-stage summary frame (stage, n_rows, checksum) whose values depend
 transitively on every stage — the externally-checkable artifact of the
 whole dependency graph.
@@ -131,11 +131,16 @@ def run_main_dag(
         )
 
     def _lending_task():
-        # the reference APPENDS each tick (lending_data_etl.py:76-91);
-        # the first run of a fresh store is plain append-create
-        q_lending_pipeline(spark, sf_dir).write.mode("append").parquet(
-            lending_path
-        )
+        # the reference upserts on (created_at, loan_duration_days),
+        # the incoming row winning (lending_data_etl.py:76-91)
+        lending = q_lending_pipeline(spark, sf_dir)
+        if os.path.exists(lending_path):
+            lending = upsert(
+                spark.read.parquet(lending_path),
+                lending,
+                ["created_at", "loan_duration_days"],
+            )
+        atomic_overwrite(lending, lending_path)
         return _summarize(
             spark.read.parquet(lending_path), "annualized_interest_rate"
         )

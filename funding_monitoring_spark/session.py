@@ -9,6 +9,8 @@ Settings chosen for correctness-parity with the reference and for scale:
   (skewed symbol keys) is handled by AQE + explicit salting helpers.
 - Arrow on: every Python-boundary exchange (pandas UDFs in the
   extension operators, toPandas in tests) is columnar-batched.
+- local[N] with N shuffle partitions, N = ``SPARK_GRAFT_CPUS`` or, when
+  unset, the CPUs this process may run on.
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+DEFAULT_SHUFFLE_PARTITIONS = CPUS
 
 
 def get_spark(
@@ -31,10 +34,9 @@ def get_spark(
     local[N] for tests/bench; on a real cluster the master comes from
     spark-submit and this factory only applies the engine confs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{CPUS}]")
         .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.sql.shuffle.partitions",

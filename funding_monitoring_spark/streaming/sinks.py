@@ -146,21 +146,12 @@ def upsert_writer(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        import time
-
-        from funding_monitoring_spark.streaming import metrics
-
-        t0 = time.perf_counter()
         spark = batch_df.sparkSession
         # A stateful upstream (watermark dedup, session windows) makes
         # availableNow run one final batch with NO input rows purely to
         # advance the watermark and evict state; an already-initialized
         # store is unchanged by an empty merge, so skip the two jobs.
         if check_empty and os.path.exists(store_path) and batch_df.isEmpty():
-            metrics.record(
-                store=store_path, batch_id=batch_id, empty_skip=True,
-                merge_sec=round(time.perf_counter() - t0, 3), hook_sec=0.0,
-            )
             return
         batch = transform(batch_df) if transform is not None else batch_df
         if seq_col is not None:
@@ -180,15 +171,8 @@ def upsert_writer(
             atomic_overwrite(merged, store_path)
         finally:
             batch.unpersist()
-        t1 = time.perf_counter()
         if on_batch_complete is not None:
             on_batch_complete(spark.read.parquet(store_path))
-        metrics.record(
-            store=store_path,
-            batch_id=batch_id,
-            merge_sec=round(t1 - t0, 3),
-            hook_sec=round(time.perf_counter() - t1, 3),
-        )
 
     return write
 
@@ -215,30 +199,14 @@ def delta_append_writer(
     partition dirs as the delta log."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        import time
-
-        from funding_monitoring_spark.streaming import metrics
-
-        t0 = time.perf_counter()
         # stateful upstreams make availableNow run one final EMPTY
         # batch purely to advance the watermark — nothing to append
         if check_empty and batch_df.isEmpty():
-            metrics.record(
-                store=store_path, batch_id=batch_id, empty_skip=True,
-                merge_sec=round(time.perf_counter() - t0, 3),
-                hook_sec=0.0,
-            )
             return
         batch = transform(batch_df) if transform is not None else batch_df
         batch = dedupe_batch(batch, key_cols, order_cols)
         batch.write.mode("overwrite").parquet(
             os.path.join(store_path, f"batch_id={batch_id}")
-        )
-        metrics.record(
-            store=store_path,
-            batch_id=batch_id,
-            merge_sec=round(time.perf_counter() - t0, 3),
-            hook_sec=0.0,
         )
 
     return write

@@ -81,12 +81,10 @@ def _chunked_events(spark, sf_dir, variant="", events=None):
     return _CHUNK_CACHE[key]
 
 
-def _replay(
-    spark, sf_dir, pipeline, variant="", events=None, **kwargs
-):
+def _replay(spark, sf_dir, pipeline, variant="", events=None):
     cdir, schema = _chunked_events(spark, sf_dir, variant, events)
     return replay_pipeline_from_chunks(
-        spark, cdir, schema, _workdir(), pipeline, **kwargs
+        spark, cdir, schema, _workdir(), pipeline
     )
 
 
@@ -175,7 +173,7 @@ def q_stream_ewma_stateful(spark, sf_dir):
     # 8 state partitions wins again (before bucketing, 32 partitions
     # were needed to spread 7,500 per-key round trips: 2 parts 98s /
     # 8 parts 32s / 32 parts 18s at sf0.1; bucketed: 5.4s at 8).
-    return _replay(spark, sf_dir, "ewma_stateful", state_partitions=8)
+    return _replay(spark, sf_dir, "ewma_stateful")
 
 
 @query(
@@ -213,7 +211,7 @@ def q_stream_anomaly_alerts(spark, sf_dir):
     prior history, so nothing is ever revised."""
     # same shape as ewma_stateful: bucketed state, so protocol cost
     # is O(buckets) and the replay default partitioning suffices
-    return _replay(spark, sf_dir, "anomaly_alerts", state_partitions=8)
+    return _replay(spark, sf_dir, "anomaly_alerts")
 
 
 @query(
@@ -778,9 +776,7 @@ def q_stream_max_drawdown(spark, sf_dir):
     and across replayed chunks, so every v/run_max division sees the
     same operands on both engines and the raw doubles hash with no
     rounding."""
-    return _replay(
-        spark, sf_dir, "drawdown_stateful", state_partitions=8
-    )
+    return _replay(spark, sf_dir, "drawdown_stateful")
 
 
 # -- streaming Count-Min rollup ------------------------------------------

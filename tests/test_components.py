@@ -246,30 +246,3 @@ def test_kcore_cascade_bound_raises(spark):
     assert kcore_decomposition(df, 2, max_rounds=12).count() == 0
     with pytest.raises(ValueError, match="k must be"):
         kcore_decomposition(df, 0)
-
-
-def test_edge_repartition_gate_is_label_identical(spark, monkeypatch):
-    """The size-gated round-join repartition (EDGE_REPARTITION_MIN)
-    must not change a single label: force the gate ON over a small
-    random graph and compare against the gate-off result."""
-    import random
-
-    from funding_monitoring_spark.operators import components as C
-
-    rng = random.Random(14)
-    pairs = [
-        (rng.randrange(60), rng.randrange(60)) for _ in range(120)
-    ]
-    df = spark.createDataFrame(
-        [(a, b) for a, b in pairs if a != b], "id_a long, id_b long"
-    )
-    base = sorted(
-        (r["id"], r["cluster_id"])
-        for r in C.connected_components(df).collect()
-    )
-    monkeypatch.setattr(C, "EDGE_REPARTITION_MIN", 0)
-    gated = sorted(
-        (r["id"], r["cluster_id"])
-        for r in C.connected_components(df).collect()
-    )
-    assert gated == base

@@ -82,20 +82,25 @@ def test_main_dag_summary_cleans_up_temp_dir(spark, sf_dir, tmp_path):
 
 def test_main_dag_rerun_is_idempotent(spark, sf_dir, tmp_path):
     """Re-running the DAG over the same warehouse reproduces identical
-    summaries for the snapshot/upsert stages (the reference's retry
-    safety); only the append-mode lending store grows."""
+    summaries for every stage (the reference's retry safety): the
+    snapshots are replaced and the lending and funding stores are
+    upserted on their primary keys."""
     base = str(tmp_path / "warehouse")
     os.makedirs(base)
     first = {r[0]: r for r in run_main_dag(spark, sf_dir, base)}
     second = {r[0]: r for r in run_main_dag(spark, sf_dir, base)}
-    for stage in (
-        "update_active_futures",
-        "update_active_spot_pairs",
-        "update_funding_data",
-        "update_funding_stats",
-    ):
-        assert first[stage] == second[stage], stage
-    # lending appended a second tick's rows
-    assert second["append_new_lending_data"][1] == 2 * first[
-        "append_new_lending_data"
-    ][1]
+    assert first == second
+
+
+def test_main_dag_rerun_stores_each_lending_key_once(spark, sf_dir, tmp_path):
+    """The lending task upserts on (created_at, loan_duration_days)
+    (reference lending_data_etl.py:76-91), so a second run into the
+    same warehouse leaves one row per key."""
+    base = str(tmp_path / "warehouse")
+    os.makedirs(base)
+    run_main_dag(spark, sf_dir, base)
+    run_main_dag(spark, sf_dir, base)
+    lending = spark.read.parquet(os.path.join(base, "kucoin_lending_rates"))
+    keys = lending.groupBy("created_at", "loan_duration_days").count()
+    assert lending.count() > 0
+    assert keys.filter("count > 1").count() == 0

@@ -245,7 +245,11 @@ def test_checkpoint_restart_processes_only_new_chunks(spark, tmp_path):
     store = os.path.join(tmp, "store")
     b1 = _events(spark, [(1, _ts(0), 7, "funding", 0.01)])
     _write_chunk(b1, chunks, 0)
-    streaming_upsert_rates(spark, chunks, b1.schema, store, ckpt)
+    q = streaming_upsert_rates(spark, chunks, b1.schema, store, ckpt)
+    # an availableNow run returns only once its query has ended
+    assert not q.isActive
+    assert spark.streams.active == []
+    assert q.lastProgress is not None
     first = spark.read.parquet(store).collect()
     assert len(first) == 1
 
