@@ -558,243 +558,6 @@ def main() -> None:
         out["overflow_queries"] = overflow_timings
     if errors:
         out["errors"] = errors
-    # r2->r3 common-set drift (+6%) investigated in round 4: the same
-    # 43 queries rerun under identical JVM settings swing far more
-    # than the drift between consecutive local runs (individual
-    # queries vary 2-8x with suite position / host contention; e.g.
-    # ngram_novelty 4.8s run-first vs 15.7s mid-suite, same code).
-    # No query body or plan changed between r2 and r3 - the drift is
-    # ambient variance plus suite growth, not a regression.
-    notes["perf_drift_r2_r3"] = (
-        "common-set +6% attributed to run-to-run variance and suite "
-        "growth; per-query plans unchanged (see bench.py comment)"
-    )
-    notes["slow_headliner_attribution_r5"] = {
-        "bpe_train_merges": (
-            "NOW K=20 via batched rounds (round 5): ~11 rounds x "
-            "(one pair-count scan + one fold rewrite), corpus state "
-            "repartitioned to all cores — 0.76 s/merge vs the "
-            "1.44 s/step unbatched loop; remaining cost is per-round "
-            "job latency, sub-linear in K"
-        ),
-        "stream_* family": (
-            "replay chunking now happens ONCE per fixture per "
-            "session (round 5) — the FIRST stream_* query in the "
-            "suite absorbs it (~3 s at sf0.1/2 chunks) plus "
-            "streaming-machinery warm-up; later ones measure only "
-            "their own per-tick work "
-            "(stream_funding_pipeline ~7.4 s warm)"
-        ),
-        "stream_anomaly_alerts": (
-            "per-tick applyInPandasWithState machinery (32 state "
-            "partitions x replay ticks), same shape as "
-            "stream_ewma_stateful"
-        ),
-        "robust_anomaly_mad": (
-            "per-row 20-element array sorts inside one Window pass; "
-            "let-bound medians keep it in codegen (>300s without)"
-        ),
-    }
-    notes["ann_recall_report_r9_r10_delta"] = (
-        "4.4 s (r9) -> 10.1 s (r10) with similarity.py and the suite "
-        "query byte-identical between the two artifact runs "
-        "(git-verified against the r9 artifact commit). Idle-box r11 "
-        "measurement: 5.5 s warm in-suite, 7.5-7.9 s solo (3 runs "
-        "each) — the r10 number was box contention during the "
-        "04:53 artifact refresh, not a regression; the residual "
-        "4.4 -> 5.5 warm delta is within the per-query suite-position "
-        "variance band (see perf_drift_r2_r3). The contention_probe "
-        "fields now stamp every artifact so this attribution is "
-        "mechanical next time."
-    )
-    notes["dedup_family_r12_delta_attributed_r13"] = (
-        "VERDICT r12 item 2 closed with isolated idle-box "
-        "`--repeat 2` runs (calib spread 3-12%) at the SAME commits: "
-        "r11 code {minhash_lsh_dedup 0.87, dedup_clusters 2.53, "
-        "dedup_clusters_star 2.85, simhash_near_dup 1.96, "
-        "incremental_minhash_dedup 1.16 s} vs r12 code "
-        "{1.51, 3.05, 3.49, 2.47, 1.52 s} — but r12 code with "
-        "release_scoped_caches() no-op'd (r11's exact cache "
-        "semantics) lands {0.79, 2.36, 2.91, 1.65, 0.90 s}: at or "
-        "BELOW r11 on every query. Cause: r11's bench never released "
-        "per-query persists, so its best-of-2 second run reused run "
-        "1's cached signature frames — warm-cache flattery, not a "
-        "faster engine; r12's cachescope release makes every repeat "
-        "run honestly cold. The first-shared-band filter itself is "
-        "a WIN at sf0.1 too (simhash 1.65 vs 1.96 under identical "
-        "cache semantics) on top of fixing the sf1 OOM. The two "
-        "stream queries flagged in r12's contended driver artifact "
-        "(stream_stream_join_attribution, stream_heavy_hitters) "
-        "measure FLAT isolated (4.47 vs 4.74, 2.36 vs 2.66) — "
-        "contention, not code. Headline best-of-2 numbers since r12 "
-        "are therefore cold-per-query and not comparable to r11's "
-        "warm-cache 167.1 s baseline."
-    )
-    notes["optimization_r13_batches_12_14"] = (
-        "Second r13 optimization session (paired/in-session A/B "
-        "evidence in OPTIMIZATION_r13.md): cube_revenue and "
-        "grouping_sets_revenue pre-aggregate at the finest "
-        "granularity before the Expand node (2.07->0.79 s, "
-        "1.45->0.75 s best-of-3 paired); tpch_q21 folds the "
-        "semi+anti pair realization into one per-order aggregate "
-        "(lineitem scans 3->1, wall flat at sf0.1); pagerank_fixed "
-        "attaches degree via a window inside one edge checkpoint "
-        "(~10% in-session A/B); the LSH bucket keys materialize each "
-        "table's hyperplane fold once instead of 6x per row "
-        "(5-query family 17.4->10.7 s paired best-of-3); "
-        "containment_join persists the train-side gram arrays "
-        "(3.7->2.1 s in-session) and dataset_overlap_kmv persists "
-        "the fingerprint arrays pre-explode (3.4->2.7 s). All "
-        "oracle-green at sf0.01 AND sf0.1; sf1 sweep rows refreshed "
-        "(every changed query <=1.76x at 10x data)."
-    )
-    notes["perf_changes_r11"] = {
-        "stream_* windowed rollups": (
-            "six pipelines (tumbling/hopping, ohlc, heavy hitters, "
-            "window-distinct, sessions) now write merge-on-read "
-            "deltas (O(batch) per tick, one idempotent batch_id "
-            "partition) and resolve conflicts at read time with one "
-            "max_by over (order_cols, batch_id) — headline stream "
-            "family 33.2 -> 23.8 s best-of-2; oracles unchanged"
-        ),
-        "ann_*pq* family": (
-            "the corpus-side index (PQ codebook+codes; IVF-PQ cell "
-            "assignments, residual codebook+codes) is now built once "
-            "per session and shared across the four queries "
-            "(build_pq_index / build_ivf_pq_index, checkpointed) — "
-            "the once-per-ingest cost amortization the r6 note "
-            "promised; steady-state family ~24 -> ~10 s, the first "
-            "query of each pair absorbs the build"
-        ),
-        "image_dhash_clusters / fuzzy_title_clusters": (
-            "connected components run over the QUOTIENT graph "
-            "(representatives only) — star edges never enter the "
-            "iterative label propagation; image clusters 15.8 -> "
-            "11.2 s at sf0.1 (codec floor ~8.4 s) and 1.08x at 10x "
-            "data"
-        ),
-        "image_dhash_near_dup at sf1": (
-            "now REFUSES by design (max_band_bucket guard, verified "
-            "live: band bucket '3:0808' holds 15,102 signatures) — "
-            "the pair-materializing contract fails loudly on "
-            "duplicate-heavy corpora instead of going quadratic; "
-            "image_dhash_clusters is the scale path"
-        ),
-    }
-    notes["new_query_attribution_r6"] = {
-        "semantic_dedup_clusters": (
-            "~6 s = the full multi-probe LSH near-dup pipeline "
-            "(persisted once into the CC edge frame) + 3-5 hash-min "
-            "label-propagation rounds, each a localCheckpointed "
-            "(node,label) shuffle + convergence probe — cost is "
-            "per-round job latency at fixture scale, bounded "
-            "equi-joins at any scale"
-        ),
-        "stream_append_compaction / stream_sketch_rollup": (
-            "per-tick streaming machinery + one store rewrite / "
-            "sketch merge; both ~1.2 s warm"
-        ),
-        "ann_*pq* family (pq, ivf_pq, 2 recall reports)": (
-            "~10 s each at sf0.1 (4 queries, ~40 s of the overflow wall): the encode scans 50k vectors x 8 subspaces against a ~370-entry/subspace broadcast codebook (argmin via min_by with MAP-SIDE partial aggregation since late r7 — the window row_number it replaced shuffled the full 150M-row explosion, ~3-4 s per query) — the deliberate recall-0.9 operating point for the linear ADC path (PQ_CENT_MOD=11, rerank 16x); the ADC scan + bounded exact re-rank are sub-second on top, and the IVF-PQ composition adds cell routing + residual encoding (round 7: recall 0.69 = the IVF routing ceiling, via residual codes + the wider IVF_PQ_RERANK shortlist — see similarity.py for the unclustered-fixture discussion). All joins broadcast (plan-gated); at 100 TB the encode is a once-per-ingest cost"
-        ),
-        "snapshot_* / stream_snapshot_commits / *_contract_*": (
-            "the table-format family (versioned commits, time "
-            "travel, rollback+expiry, manifest file skipping, "
-            "incremental reads, streaming commits, batch+stream "
-            "data contracts) each lands <1 s at sf0.1 — manifest "
-            "operations are metadata-sized and every heavy rule "
-            "fuses into one scan"
-        ),
-    }
-    notes["new_query_attribution_r7"] = {
-        "multimodal_mjpg_framesample / multimodal_jpeg_roundtrip": (
-            "the heaviest r7 additions (~20 s / ~6 s at sf0.1): "
-            "~17.5k / 5k pure-Python JPEG frame roundtrips with no "
-            "imaging library in this environment (already 5x faster "
-            "after the bulk-bit-read entropy path; with Pillow "
-            "installed the same queries ride libjpeg). Honest cost "
-            "of real-codec coverage, embarrassingly parallel across "
-            "partitions at scale"
-        ),
-        "ann_*pq* family": (
-            "+1-2 s each vs r6: residual encoding adds the "
-            "per-vector residual join and the IVF_PQ_RERANK=48 "
-            "shortlist widens the exact rescore — the trade that "
-            "bought recall 0.66 -> 0.69 (= the IVF routing ceiling) "
-            "on the unclustered fixture; rerank*k stays a per-query "
-            "constant at any corpus size"
-        ),
-        "fuzzy_title_pairs": (
-            "+~1.5 s vs r6: hot-bucket length-class re-blocking adds "
-            "a tagged checkpoint and a secondary guard — the price "
-            "of degrading gracefully instead of raising on viral "
-            "title clusters"
-        ),
-        "snapshot_bloom_pruned_read / bloom_prefilter_join / "
-        "snapshot_version_cdc / ann_index_incremental / "
-        "incremental_minhash_dedup / multimodal_{adpcm,gif,resize}": (
-            "all ~1-3 s at sf0.1 — manifest-sized metadata ops, "
-            "scan-stage filters, or bounded codec roundtrips"
-        ),
-    }
-    notes["avi_framesample_r9_regression_attributed_r10"] = (
-        "multimodal_avi_framesample 0.8 -> 1.4 s in BENCH_LOCAL_r9 was "
-        "run-position variance, not code: measured r10 in a warm "
-        "session (python workers pre-warmed by another media query), "
-        "3 consecutive runs land 0.84-0.96 s — identical to r8's "
-        "0.83 s; a cold single-query run attributes ~2 s of python-"
-        "worker startup to whichever mapInPandas query goes first"
-    )
-    notes["fuzzy_clusters_star_form_r10"] = (
-        "fuzzy_title_clusters rebuilt on edit_distance_cluster_edges "
-        "(exact-duplicate collapse to min-id representatives + star "
-        "edges; only distinct titles enter the fuzzy candidate "
-        "space): sf1 wall 152 -> 11.9 s, scale factor at 10x data "
-        "20.9x -> 1.09x, identical recursive-closure oracle; "
-        "fuzzy_title_pairs keeps the all-pairs OUTPUT contract and "
-        "remains pair-count-bound by construction"
-    )
-    notes["new_query_attribution_r10"] = {
-        "stream_funding_pipeline": (
-            "9.7 -> ~5.5 s warm: persisted the deduped micro-batch "
-            "across the ordered merge's three scans, skipped "
-            "availableNow's empty flush batch, dropped the redundant "
-            "in-stream watermark dedup (the LWW merge already "
-            "suppresses exact resends; same oracle)"
-        ),
-        "multimodal_tiff/aiff/pdf + warc/zip/tar + jpeg_exif_scan": (
-            "new codec/container roundtrips, each a 1:1 mapInPandas "
-            "pair over spread ids (encode -> Arrow binary -> parse), "
-            "~1-5 s at sf0.1 — embarrassingly parallel, no shuffle; "
-            "they join the overflow set, not the headline"
-        ),
-        "gopher_quality_rules / html_text_extract / "
-        "url_canonicalize_dedup / robots_txt_filter": (
-            "pure JVM codegen (HOF folds, regexp, broadcast rule "
-            "array) — sub-second to ~3 s at sf0.1; url/robots pay "
-            "one tiny dim-side shuffle (explode/groupBy of 3 rows "
-            "per doc resp. rules per host), corpus side map-only"
-        ),
-        "image_dhash_near_dup": (
-            "sf1 20.3x at 10x data is OUTPUT-bound, same story as "
-            "fuzzy_title_pairs: the 2-7 px fixture images land in a "
-            "tiny effective dHash space, so TRUE Hamming<=3 pair "
-            "mass grows ~quadratically with corpus size and the "
-            "pair-exact oracle contract materializes all of it — "
-            "wall grows 5x SLOWER than the pair count; real image "
-            "corpora (large images, sparse collisions) stay "
-            "band-bounded, and the banding itself never shuffles "
-            "more than (band_key, id) rows"
-        ),
-    }
-    notes["lsh_multiprobe_tradeoff_r6"] = (
-        "near_dup_recall_report / ann LSH queries run ~1.5x longer "
-        "than round 5: the probing side now fans out to each table's "
-        "1-bit-flip buckets (~5x candidates), buying recall@5 "
-        "0.34 -> 0.85 and near-dup pair recall 0.58 -> 0.84 — a "
-        "deliberate recall/candidate-count trade, still bucket-"
-        "bounded equi-joins"
-    )
     out["notes"] = notes
     print(json.dumps(out), flush=True)
     print(summary_line, flush=True)

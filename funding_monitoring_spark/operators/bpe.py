@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from funding_monitoring_spark.plans.inspect import spread_to_parallelism
+
 #: pair-string separator for counting/ordering (never appears in a
 #: symbol: symbols come from \S+ words)
 PAIR_SEP = " "
@@ -61,9 +63,7 @@ def word_state(
     (measured: the whole K=20 loop single-threaded). An input that
     already has enough partitions — any real multi-file corpus — is
     left alone: no unconditional full-corpus shuffle."""
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
+    docs = spread_to_parallelism(docs)
     words = docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(
@@ -97,9 +97,7 @@ def word_freq_state(
     the natural-language corpus ratio is 5-30x, and it GROWS with
     corpus size (Heaps' law: instances scale linearly, distinct words
     sublinearly), so the win compounds at 100 TB."""
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
+    docs = spread_to_parallelism(docs)
     words = docs.select(
         F.explode(
             F.regexp_extract_all(
@@ -214,16 +212,6 @@ def bpe_train(
     return out
 
 
-def bpe_encode_vocab(state: DataFrame) -> DataFrame:
-    """Corpus vocabulary after training: distinct symbols with corpus
-    frequencies (the tokenizer's unigram table)."""
-    return (
-        state.select(F.explode("symbols").alias("symbol"))
-        .groupBy("symbol")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def merge_pairs_fold(symbols: Column, merges: Column) -> Column:
     """Apply an ORDERED array of merge structs (rank, pair_a, pair_b)
     to one symbol array in a single projection: the double-space
@@ -254,7 +242,7 @@ def merge_pairs_fold(symbols: Column, merges: Column) -> Column:
 def batch_candidates(
     state: DataFrame,
     cap: int,
-    vocab: DataFrame | frozenset | set | list | tuple | None = None,
+    vocab: frozenset[str],
     weight_col: str | None = None,
 ) -> DataFrame:
     """Select the largest batch of ranked pairs whose one-pass merge
@@ -286,16 +274,13 @@ def batch_candidates(
        single merge is literally the sequential step).
 
     Runs entirely on a <= cap+1-row frame: a row_number window, a
-    running collect_list for the disjointness scan, and a broadcast
-    semi-flag against the distinct-symbol vocab.
+    running collect_list for the disjointness scan, and a literal
+    IN-list flag against the distinct-symbol vocab.
 
-    ``vocab``: the CURRENT distinct-symbol set — either a 1-column
-    ('merged') DataFrame (broadcast-joined) or a plain Python
-    set/frozenset/list of symbol strings (alphabet + merges bounded
-    at any corpus size), which becomes a literal IN-list predicate —
-    no join, no exchange, no per-round DataFrame construction.
-    When None it is derived from `state` (an extra corpus scan);
-    bpe_train_batched maintains the set incrementally instead —
+    ``vocab``: the CURRENT distinct-symbol set (alphabet + merges,
+    bounded at any corpus size), which becomes a literal IN-list
+    predicate — no join, no exchange, no per-round DataFrame
+    construction. bpe_train_batched maintains it incrementally —
     initial distinct characters once, plus each round's merged
     strings — so the per-round cost stays at one corpus pass.
 
@@ -320,28 +305,11 @@ def batch_candidates(
         .orderBy(F.desc("n"), F.asc("pair_a"), F.asc("pair_b"))
         .limit(cap + 1)
     )
-    if vocab is None:
-        vocab = state.select(
-            F.explode("symbols").alias("merged")
-        ).distinct()
-    if isinstance(vocab, (set, frozenset, list, tuple)):
-        # literal IN-list membership: bounded (alphabet + merges), so
-        # the predicate never grows with the corpus; sorted for a
-        # deterministic expression
-        vocab_lit = sorted(vocab)
-        in_vocab = (
-            F.col("merged").isin(vocab_lit)
-            if vocab_lit
-            else F.lit(False)
-        )
-        flagged_join = lambda cand: cand.withColumn(  # noqa: E731
-            "in_vocab", F.when(in_vocab, F.lit(True))
-        )
-    else:
-        vocab = vocab.withColumn("in_vocab", F.lit(True))
-        flagged_join = lambda cand: cand.join(  # noqa: E731
-            F.broadcast(vocab), "merged", "left"
-        )
+    # literal IN-list membership: bounded (alphabet + merges), so the
+    # predicate never grows with the corpus; sorted for a
+    # deterministic expression
+    vocab_lit = sorted(vocab)
+    in_vocab = F.col("merged").isin(vocab_lit) if vocab_lit else F.lit(False)
     w = Window.orderBy(F.desc("n"), F.asc("pair_a"), F.asc("pair_b"))
     toks = F.array(
         F.col("pair_a"),
@@ -364,14 +332,12 @@ def batch_candidates(
         F.lit(False),
     )
     flagged = (
-        flagged_join(
-            cand.withColumn("merged", F.concat("pair_a", "pair_b"))
-        )
+        cand.withColumn("merged", F.concat("pair_a", "pair_b"))
         .withColumn("rank", F.row_number().over(w))
         .withColumn(
             "blocked",
             F.arrays_overlap(toks, prev)
-            | F.coalesce(F.col("in_vocab"), F.lit(False))
+            | F.coalesce(in_vocab, F.lit(False))
             | after_self,
         )
     )

@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from funding_monitoring_spark.operators.cachescope import scoped_persist
+from funding_monitoring_spark.plans.inspect import spread_to_parallelism
 
 
 def qgram_set(s: Column, q: int) -> Column:
@@ -77,11 +78,9 @@ def _fuzzy_base(
     lands 1-partition and every downstream self-join inherits the
     skew) — measured 3.5 s single-task for the sf0.1 prefix build
     alone. A real multi-file corpus is left untouched."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
     return (
-        df.select(
+        spread_to_parallelism(df)
+        .select(
             F.col(id_col).alias("_id"),
             F.col(group_col).alias("_g"),
             F.col(str_col).alias("_s"),

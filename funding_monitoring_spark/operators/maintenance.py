@@ -25,6 +25,7 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from funding_monitoring_spark.plans.inspect import conf_override
 from funding_monitoring_spark.streaming.sinks import atomic_overwrite
 
 
@@ -149,18 +150,6 @@ def compact_store(
             )
             .drop("__pval", "__k", "__off")
         )
-        # Range boundaries come from sampling; a tiny partition's
-        # index underrepresented in the sample would merge into a
-        # neighbor's range bucket. Raise the per-partition sample for
-        # the duration of the rewrite so every dense index value is
-        # seen (n_target is small — the sample stays driver-cheap);
-        # the maxRecordsPerFile backstop below still catches any
-        # residual miss.
-        _SAMPLE_KEY = (
-            "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-        )
-        prev_sample = spark.conf.get(_SAMPLE_KEY, None)
-        spark.conf.set(_SAMPLE_KEY, "1000")
         out = indexed.repartitionByRange(n_target, "__fidx").drop(
             "__fidx"
         )
@@ -191,9 +180,18 @@ def compact_store(
             ),
             default=None,
         )
-        try:
-            # the sample conf is read when the exchange EXECUTES
-            # (inside the write), so it must stay raised until then
+        # Range boundaries come from sampling; a tiny partition's
+        # index underrepresented in the sample would merge into a
+        # neighbor's range bucket. Raise the per-partition sample for
+        # the rewrite so every dense index value is seen (n_target is
+        # small — the sample stays driver-cheap); the maxRecordsPerFile
+        # backstop still catches any residual miss. The conf is read
+        # when the exchange EXECUTES, inside the write.
+        with conf_override(
+            spark,
+            "spark.sql.execution.rangeExchange.sampleSizePerPartition",
+            "1000",
+        ):
             atomic_overwrite(
                 out,
                 path,
@@ -204,11 +202,6 @@ def compact_store(
                     else None
                 ),
             )
-        finally:
-            if prev_sample is None:
-                spark.conf.unset(_SAMPLE_KEY)
-            else:
-                spark.conf.set(_SAMPLE_KEY, prev_sample)
     else:
         n_target = max(1, math.ceil(total / target_bytes))
         atomic_overwrite(df.repartition(n_target), path)

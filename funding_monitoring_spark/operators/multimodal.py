@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from funding_monitoring_spark.plans.inspect import spread_to_parallelism
+
 #: metadata struct carried alongside every media payload
 MEDIA_META = T.StructType(
     [
@@ -132,6 +134,15 @@ def fused_map(frame: DataFrame, run, schema) -> DataFrame:
     out = base.mapInPandas(composed, schema=schema)
     out._media_fusion_chain = (base, runs)
     return out
+
+
+def _synth_from_ids(ids: DataFrame, id_col: str, run) -> DataFrame:
+    """The synthesizers' shared tail: the id column as ``media_id``,
+    spread across the cluster (a single-file source is ONE partition,
+    which would run the whole per-payload codec on one core), then the
+    codec ``run`` as a fused media stage."""
+    media_ids = ids.select(F.col(id_col).alias("media_id"))
+    return fused_map(spread_to_parallelism(media_ids), run, MEDIA_SCHEMA)
 
 
 def _pil_image_module():
@@ -1035,19 +1046,7 @@ def synthesize_tiff_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
-
-
-def _spread_ids(media_ids: DataFrame) -> DataFrame:
-    """Round-robin the id column across the session's full
-    parallelism before the codec mapInPandas. A single-file parquet
-    source arrives as ONE partition, which would serialize the whole
-    per-payload codec workload onto one core; the ids are a few bytes
-    each, so this shuffle is free relative to the CPU it unlocks (the
-    encode stage is otherwise embarrassingly parallel)."""
-    sc = media_ids.sparkSession.sparkContext
-    return media_ids.repartition(sc.defaultParallelism)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def _synthesize_media(
@@ -1088,8 +1087,7 @@ def _synthesize_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def synthesize_bmp_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1136,10 +1134,6 @@ def decode_image_features(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return fused_map(media, run, BMP_FEATURE_SCHEMA)
-
-
-#: back-compat name from when only the BMP decoder existed
-decode_bmp_features = decode_image_features
 
 
 #: twin ids live in a disjoint range so pair output is unambiguous
@@ -1190,8 +1184,7 @@ def synthesize_image_scale_twins(
                 {"media_id": out_ids, "payload": payloads, "meta": metas}
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 # -- EXIF in JPEG APP1 (TIFF IFD machinery from operators/tiffcodec.py) ----
@@ -1332,7 +1325,7 @@ def synthesize_pdf_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    ids = _spread_ids(
+    ids = spread_to_parallelism(
         docs.select(F.col("doc_id").alias("media_id"), "text")
     )
     return fused_map(ids, run, MEDIA_SCHEMA)
@@ -1628,8 +1621,7 @@ def synthesize_wav_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_wav_features(media: DataFrame) -> DataFrame:
@@ -1820,8 +1812,7 @@ def synthesize_aiff_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_aiff_features(media: DataFrame) -> DataFrame:
@@ -1894,8 +1885,7 @@ def synthesize_flac_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_flac_features(media: DataFrame) -> DataFrame:
@@ -1981,8 +1971,7 @@ def synthesize_mp3meta_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def mp3_metadata_features(media: DataFrame) -> DataFrame:
@@ -2267,8 +2256,7 @@ def synthesize_gif_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def synthesize_adpcm_media(
@@ -2311,8 +2299,7 @@ def synthesize_adpcm_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def _adpcm_samples(media_id: int, n: int):
@@ -2415,8 +2402,7 @@ def synthesize_g711_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_g711_features_tolerant(
@@ -2497,8 +2483,7 @@ def synthesize_mp3_media_libsndfile(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 # -- pure-codec MP3 path (operators/mp3codec.py; no dependencies) ----------
@@ -2566,8 +2551,7 @@ def synthesize_mp3_pure_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_mp3_features_tolerant(media: DataFrame) -> DataFrame:
@@ -2916,8 +2900,7 @@ def synthesize_avi_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 AVI_FRAME_SCHEMA = T.StructType(
@@ -3006,8 +2989,7 @@ def synthesize_mjpg_avi_media(
                 }
             )
 
-    media_ids = _spread_ids(ids.select(F.col(id_col).alias("media_id")))
-    return fused_map(media_ids, run, MEDIA_SCHEMA)
+    return _synth_from_ids(ids, id_col, run)
 
 
 def decode_avi_frames_tolerant(
@@ -3250,7 +3232,7 @@ def synthesize_charset_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    ids = _spread_ids(
+    ids = spread_to_parallelism(
         docs.select(F.col("doc_id").alias("media_id"), "text")
     )
     return fused_map(ids, run, MEDIA_SCHEMA)

@@ -35,8 +35,6 @@ growth (the frame is persisted once; each step's plan is independent).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -278,7 +276,3 @@ def classifier_report(
             6,
         ).alias("accuracy"),
     )
-
-
-def _py_sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 from funding_monitoring_spark.operators.cachescope import (
     scoped_persist,
 )
+from funding_monitoring_spark.plans.inspect import spread_to_parallelism
 
 N_PLANES = 4  # planes (bits) per hash table
 N_TABLES = 3  # independent hash tables (multi-probe recall dial)
@@ -450,12 +451,9 @@ def _cell_assignments(
                 if outs:
                     yield _pd.concat(outs, ignore_index=True)
 
-        sc_ctx = vecs.sparkSession.sparkContext
-        return (
+        return spread_to_parallelism(
             vecs.select("v_id", "v_emb", "v_norm")
-            .repartition(sc_ctx.defaultParallelism)
-            .mapInPandas(assign, out_schema)
-        )
+        ).mapInPandas(assign, out_schema)
     scored = vecs.crossJoin(F.broadcast(centroids)).withColumn(
         "cscore",
         seq_dot(F.col("v_emb"), F.col("cent_emb"))
@@ -1022,9 +1020,7 @@ def _argmin_codes(subs: DataFrame, cents: DataFrame) -> DataFrame:
     # cheap-to-store / expensive-to-process shape. The sf1 sweep
     # measured the un-spread JVM version running the entire 60M-row
     # explosion in a single task (189 s -> ~6 s at 32 cores).
-    sc = subs.sparkSession.sparkContext
-    subs = subs.repartition(sc.defaultParallelism)
-    cand = subs.mapInPandas(survivors, out_schema)
+    cand = spread_to_parallelism(subs).mapInPandas(survivors, out_schema)
     dist = F.round(F.col("d"), SCORE_ROUND)
     return cand.groupBy("c_id", "m").agg(
         F.min_by(

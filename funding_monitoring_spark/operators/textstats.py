@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from funding_monitoring_spark.functions.scalars import let
+from funding_monitoring_spark.plans.inspect import scan_size_bytes
 
 POLY_MOD = 1_000_000_007
 POLY_INIT = 7
@@ -302,17 +303,6 @@ def punct_ratio(col: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str, stopwords: tuple[str, ...]) -> Column:
-    toks = tokens(col)
-    stops = F.array(*[F.lit(w) for w in stopwords])
-    n_stop = F.size(
-        F.filter(toks, lambda t: F.array_contains(stops, F.lower(t)))
-    )
-    return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(
-        F.lit(0.0)
-    )
-
-
 def quality_score(col: Column | str) -> Column:
     """Deterministic quality heuristic in [0,1]: length component +
     low-punctuation component + English-stopword component. The exact
@@ -413,18 +403,6 @@ def lang_id(col: Column | str) -> Column:
 PMI_PERSIST_MIN_BYTES = 32 * 1024 * 1024
 
 
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's file-size-based estimate of the frame's source scan
-    (no job, any filesystem). Unknown/huge estimates return as-is —
-    the caller treats big as 'persist', the at-scale-safe default."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate only; default to big
-        return 1 << 62
-
-
 def collocation_pmi(
     docs: DataFrame,
     text_col: str = "text",
@@ -463,7 +441,7 @@ def collocation_pmi(
     bcnt = big.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("n_pair")
     )
-    if _scan_size_bytes(docs) >= PMI_PERSIST_MIN_BYTES:
+    if scan_size_bytes(docs) >= PMI_PERSIST_MIN_BYTES:
         # size-gated 2-pass shape: persist the count tables (consumed
         # by both join sides resp. the totals) and derive each total
         # as the exact integer sum of its count table — identical to

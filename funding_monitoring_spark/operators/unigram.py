@@ -135,9 +135,8 @@ def unigram_lm_train(
         docs.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wcount"))
-        .repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        # unconditional: an aggregate's partition count costs its shuffle
+        .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint(eager=True)
     )
 

@@ -43,7 +43,6 @@ def upsert(
     existing: DataFrame,
     new: DataFrame,
     key_cols: Sequence[str],
-    broadcast_new_keys: bool = True,
     order_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Merge of ``new`` into ``existing`` on key_cols.
@@ -59,16 +58,17 @@ def upsert(
         SELECT * FROM existing WHERE key NOT IN (SELECT key FROM new)
         UNION ALL SELECT * FROM new
 
-    Scale shape: both variants touch the (huge) store only through
-    broadcast joins against the (tiny) batch — no shuffle of the
-    store. The ordered variant reads the store twice (anti-join for
-    untouched keys, semi-join for contested ones) and re-resolves only
-    the contested rows, a frame bounded by 2x the batch size.
+    Scale shape: the batch's distinct keys are always broadcast, so
+    both variants touch the (huge) store only through broadcast joins
+    against the (tiny) batch — no shuffle of the store. The ordered
+    variant reads the store twice (anti-join for untouched keys,
+    semi-join for contested ones) and re-resolves only the contested
+    rows, a frame bounded by 2x the batch size.
     """
     new = new.select(*existing.columns)
-    new_keys = new.select(*key_cols).dropDuplicates(list(key_cols))
-    if broadcast_new_keys:
-        new_keys = F.broadcast(new_keys)
+    new_keys = F.broadcast(
+        new.select(*key_cols).dropDuplicates(list(key_cols))
+    )
     survivors = existing.join(new_keys, on=list(key_cols), how="left_anti")
     if order_cols is None:
         return survivors.unionByName(new)

@@ -61,10 +61,11 @@ def rates_from_events(events: DataFrame) -> DataFrame:
     )
 
 
-def with_anchor(rates: DataFrame, time_col: str = "funding_time") -> DataFrame:
-    """Attach scalar max(time) as an ``anchor`` column via a broadcast
-    cross join — no driver collect, scales to any input size."""
-    anchor = rates.agg(F.max(time_col).alias("anchor"))
+def with_anchor(rates: DataFrame) -> DataFrame:
+    """Attach scalar max(funding_time) as an ``anchor`` column via a
+    broadcast cross join — no driver collect, scales to any input
+    size."""
+    anchor = rates.agg(F.max("funding_time").alias("anchor"))
     return rates.crossJoin(F.broadcast(anchor))
 
 

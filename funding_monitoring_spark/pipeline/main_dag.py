@@ -215,22 +215,17 @@ def run_main_dag(
     return summaries
 
 
-def main_dag_summary(
-    spark: SparkSession, sf_dir: str, base_dir: str | None = None
-) -> DataFrame:
-    """Run the DAG and return the summary frame. With base_dir=None the
-    stores live in a throwaway temp dir removed after the summaries are
-    computed (they are plain Python scalars by then, so the returned
-    frame has no lazy dependency on the deleted files)."""
+def main_dag_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run the DAG in a throwaway temp dir and return the summary
+    frame. The dir is removed once the summaries are computed (they
+    are plain Python scalars by then, so the returned frame has no
+    lazy dependency on the deleted files)."""
     import shutil
     import tempfile
 
-    cleanup = base_dir is None
-    if cleanup:
-        base_dir = tempfile.mkdtemp(prefix="main_dag_parity_")
+    base_dir = tempfile.mkdtemp(prefix="main_dag_parity_")
     try:
         rows = run_main_dag(spark, sf_dir, base_dir)
     finally:
-        if cleanup:
-            shutil.rmtree(base_dir, ignore_errors=True)
+        shutil.rmtree(base_dir, ignore_errors=True)
     return spark.createDataFrame(rows, SUMMARY_SCHEMA)

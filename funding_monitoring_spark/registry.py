@@ -31,346 +31,69 @@ def query(name: str, sql: str | None):
 
 
 #: Driver-verification priority. The per-round differential driver
-#: checks only the FIRST 50 entries of queries(), so ordering decides
-#: which queries get an external correctness row this round.
-#:
-#: Rotation schedule (documented commitment; max row age <= 2 rounds):
-#:   r1 window: the 50 batch/dedup/olap/parity/sampling queries.
-#:   r2 window: TPC-H, temporal, streaming, ANN, text, window families
-#:              plus all round-2 first-wave queries (50/50 green).
-#:   r3 window: the 13 late-r2 queries owed a first row, the 2
-#:              re-shaped sketches, the 4 r3-new queries, then the
-#:              oldest r1 rows over since-changed code (50/50 green).
-#:   r4 window (this list): (a) the 15 queries registered late in
-#:       round 3 that have never had an external driver row, exactly
-#:       as pre-staged in r3's plan; (b) main_dag_parity — round 4's
-#:       ONLY new registration, placed inside the window at
-#:       registration time (registration is FROZEN once the window
-#:       fills: any later addition must ship with a driver-format row
-#:       in CORRECTNESS_LOCAL_r4.json, emitted by
-#:       tools/local_correctness.py); (c) the 17 queries still
-#:       carrying an r1-only row; (d) the oldest r2 rows, streaming
-#:       and temporal families first (their sink/state code changed
-#:       this round: streaming/sinks.py legacy-marker fix).
-#:   r5 window (this list — executes the precommitted r5 plan):
-#:       (a) the 47 round-4 post-freeze registrations, in the order
-#:       pre-staged in round 4 — they carry local driver-format rows
-#:       (CORRECTNESS_LOCAL_r4.json, green) but have never had an
-#:       EXTERNAL row; (b) 3 of the 33 remaining r2-row queries —
-#:       the three whose code lives in operators/similarity.py,
-#:       which changes this round (ANN recall report), so the rows
-#:       most at risk of rotting over changed code refresh first.
-#:       Registration is FROZEN again once this window fills: every
-#:       round-5 registration (ann_recall_report, salted skew-stress
-#:       twins, pruned-fixture routes, ...) ships with a driver-format
-#:       row in CORRECTNESS_LOCAL_r5.json (tools/local_correctness.py)
-#:       and queues for r6.
-#:   r6 window (this list — executes the precommitted r6 plan):
-#:       (a) the 7 round-5 post-freeze registrations, never
-#:       driver-checked; (b) token_id_encoding +
-#:       packed_training_batches — r5's only red rows, re-checked
-#:       after their array<int> outputs were serialized to comma
-#:       strings (the driver's canonicalizer sorts raw pandas columns
-#:       and crashes on list cells); (c) the 30 remaining r2-row
-#:       queries (TPC-H remainder, text/curation families); (d) 11
-#:       oldest r3 rows, those over since-changed files first
-#:       (curation_suite.py: token serialization; multimodal.py:
-#:       JPEG subsampling + optional audio codecs; streaming
-#:       pipelines.py: TTL watermark parameterization).
-#:   r7 window (this list — executes the precommitted r7 plan):
-#:       (a) the 34 round-6 post-freeze
-#:       registrations in registration order —
-#:       bigram_logprob_score, acf_by_type, max_drawdown_by_type,
-#:       fuzzy_title_pairs, fuzzy_title_clusters,
-#:       count_min_freq_report, cusum_change_points,
-#:       hll_sketch_merge_rollup,
-#:       data_contract_report, span_dedup_cleaned_docs,
-#:       dataset_overlap_kmv,
-#:       snapshot_time_travel_read, snapshot_rollback_expire,
-#:       snapshot_incremental_read, snapshot_pruned_read,
-#:       snapshot_optimize_read, file_provenance_report,
-#:       incremental_rollup_maintenance,
-#:       grouped_split_leakage_report, kfold_split_stats,
-#:       weighted_sample_priority, semantic_dedup_clusters,
-#:       ann_cosine_topk_pq, ann_pq_recall_report,
-#:       ann_cosine_topk_ivf_pq, ann_ivf_pq_recall_report,
-#:       stream_append_compaction, stream_snapshot_commits,
-#:       stream_sketch_rollup, stream_contract_ledger,
-#:       stream_max_drawdown, stream_count_min_rollup,
-#:       stream_late_event_audit, collocation_pmi (each ships with a driver-format row in
-#:       CORRECTNESS_LOCAL_r6.json, plus the optional-codec
-#:       self-registrations multimodal_jpeg_roundtrip /
-#:       multimodal_mjpg_framesample / multimodal_mp3_roundtrip
-#:       wherever their libraries exist);
-#:       (b) the remaining slots (50 - 34 = 16) to the oldest r3
-#:       rows, those over files changed in r6 first (similarity.py:
-#:       PQ additions → embedding_quantize_int8; components.py:
-#:       CC reuse by semantic_dedup_clusters → dedup_clusters,
-#:       dedup_clusters_star, pagerank_trading_graph; dedup.py
-#:       family), then oldest registration order (batch_ops head).
-#:   r8 window (this list — executes the precommitted r8 plan):
-#:       (a) round-7 post-freeze registrations
-#:       first (each ships with a driver-format row in
-#:       CORRECTNESS_LOCAL_r7.json) — multimodal_jpeg_roundtrip and
-#:       multimodal_mjpg_framesample (now registered unconditionally
-#:       via the pure baseline JPEG codec), ann_index_incremental
-#:       (snapshot-store + IVF composition),
-#:       snapshot_bloom_pruned_read (bloom file skipping),
-#:       bloom_prefilter_join (runtime bloom join filter),
-#:       multimodal_resize_real (real pixel resample),
-#:       incremental_minhash_dedup (signature-store near-dup),
-#:       snapshot_version_cdc (row-level CDC across versions),
-#:       multimodal_adpcm_roundtrip (pure-Python IMA ADPCM),
-#:       multimodal_gif_roundtrip (GIF87a/LZW codec),
-#:       hashed_ngram_quality_score (hashing-trick linear filter),
-#:       merge_on_read_snapshot (LWW merge-on-read over deltas),
-#:       stream_merge_on_read (append-commit ingest + reader LWW),
-#:       image_dhash_index (perceptual image hash),
-#:       snapshot_metadata_count (COUNT(*) from manifest row counts) —
-#:       15 post-freeze registrations in all, so the r8 window is
-#:       15 + the 23 r3-row remainder + the 12 oldest r4 rows = 50;
-#:       (b) the 23 r3-row remainder
-#:       (age 5 rounds at r8 — oldest in the registry): upsert_merge,
-#:       scalar_datetime_suite, scalar_string_suite,
-#:       scalar_cast_annualize, json_extract, nested_json_explode,
-#:       full_outer_reconciliation, jsonl_quarantine, salted_join_agg,
-#:       pivot_status_by_priority, unpivot_part_attrs, cube_revenue,
-#:       set_intersect_nations, set_except_nations,
-#:       approx_quantiles_events, futures_snapshot,
-#:       spot_pairs_snapshot, lending_pipeline, funding_stats,
-#:       sql_funding_stats, trailing_time_features,
-#:       tpch_q8_market_share, expectation_audit; (c) remaining slots
-#:       to the oldest r4 rows, streaming family first
-#:       (stream_upsert_rates, stream_tumbling_rollup,
-#:       stream_lending_append, stream_ewma_stateful,
-#:       stream_funding_pipeline, stream_stream_join_attribution,
-#:       stream_session_windows — streaming/pipelines.py changed
-#:       again in r7: drawdown run_max guard). The r4 remainder rolls
-#:       to r9. Every overflow query gets a fresh local row each
-#:       round.
-#:   r9 plan (precommitted): (a) the 6 round-8 post-freeze
-#:       registrations first, in registration order (each shipped
-#:       with a green driver-format row in CORRECTNESS_LOCAL_r8.json)
-#:       — snapshot_bloom_pruned_read_str,
-#:       multimodal_png_variants_roundtrip,
-#:       multimodal_flac_roundtrip, multimodal_jpeg420_roundtrip,
-#:       multimodal_jpeg_progressive_roundtrip,
-#:       multimodal_mp3_frame_scan; (b) the 38
-#:       r4-row remainder — the oldest rows in the registry at r9
-#:       (ann_cosine_topk/_lsh/_scale, asof joins, broadcast/semi
-#:       joins, cdc_materialize, TPC-H q2/q9/q11/q16/q20/q21, file
-#:       sources, sessionization, samplers, multimodal wav/avi,
-#:       main_dag_parity, window_distribution_suite, ...), in
-#:       registration order — note ann_cosine_topk_ivf/_ivf_kmeans
-#:       and the PQ family run over similarity.py code that changed
-#:       in r8 (IVF_CENT_CAP + argmin repartition), so the r4/r5
-#:       rows over that file lead their cohorts; (c) remaining slots
-#:       (50 - 6 - 38 = 6; the original note said 7 — an arithmetic
-#:       slip, there are 6 post-freeze registrations, so 6 slots
-#:       remain) to the oldest r5 rows, the three similarity_suite
-#:       rows first per the lead-their-cohort rule above
-#:       (ann_cosine_topk_ivf, embedding_near_dup,
-#:       ann_cosine_topk_ivf_kmeans), then true registration order
-#:       (funding_rate_anomaly, snapshot_diff_ticks,
-#:       heavy_hitter_users). Registration FREEZES once the r9
-#:       window fills.
-#:   r10 plan (precommitted): (a) the round-9 post-freeze
-#:       registrations first, in registration order (each ships
-#:       with a green driver-format row in CORRECTNESS_LOCAL_r9.json)
-#:       — multimodal_mp3_roundtrip (pure Layer III codec),
-#:       multimodal_png16_roundtrip (wide-depth PNG),
-#:       multimodal_jpeg12_roundtrip (extended-sequential SOF1),
-#:       xml_file_source (Spark-4 native xml data source),
-#:       multimodal_g711_roundtrip (mu-law/A-law telephony WAV);
-#:       (b) the 42 r5-row remainder — the oldest rows in the
-#:       registry at r10 (the 48-query r5 cohort minus the six rows
-#:       pulled into the r9 window) in registration order; (c) the
-#:       remaining 3 slots (50 - 5 - 42) to the oldest r6 rows in
-#:       registration order. The window is FULL, so round-9
-#:       registration is FROZEN as of the g711 entry (any r10
-#:       registration queues for r11 with a local row, per the
-#:       standing post-freeze rule).
-#:   r10 window (this list — GENERATED, not hand-counted): as of r10
-#:       the window is produced by `python tools/window_plan.py`
-#:       (VERDICT r9 next-item #9 — two consecutive rounds contained
-#:       a hand-arithmetic slip in the cohort counts). The tool
-#:       encodes the standing rule: never-external queries first,
-#:       then everything else by round of most-recent external row
-#:       (oldest first), ties broken by registration order; take 50.
-#:       For r10 that yields exactly the precommitted plan: the 5
-#:       round-9 post-freeze queries (xml_file_source,
-#:       multimodal_png16/jpeg12/g711/mp3_roundtrip), the 42-query
-#:       cohort whose last external row is r5, and the 3 oldest
-#:       rows whose last external row is r6 (winsorized_stats,
-#:       repetition_filter, tfidf_top_terms). Done right, this is the
-#:       first round with 247/247 cumulative external coverage.
-#:       tests/test_registry_window.py asserts _PRIORITY ==
-#:       compute_plan(max_round=9)["window"] so the list can never
-#:       drift from the rule it claims to follow. Registration is
-#:       FROZEN for r10 as of this list: any round-10 registration
-#:       ships with a green local row and queues for r11.
-#:   r11 window (this list — executes the precommitted r11 plan,
-#:       generated by `python tools/window_plan.py` at max_round=10):
-#:       (a) the 16 round-10 post-freeze registrations, never
-#:       external (TIFF/AIFF/PDF/EXIF/ID3/multiscan-JPEG,
-#:       WARC/ZIP/TAR, Avro, HTML/URL/robots/Gopher, image near-dup,
-#:       stream_media_ingest); (b) the 34 oldest last-r6 rows in
-#:       registration order. Done right, this is the first round
-#:       with 263/263 cumulative external coverage. Registration is
-#:       FROZEN for r11 as of this list: any round-11 registration
-#:       ships with a green local row (CORRECTNESS_LOCAL_r11.json)
-#:       and queues for r12.
-#:   r12 window (this list — executes the precommitted r12 plan,
-#:       generated by `python tools/window_plan.py` at max_round=11):
-#:       (a) the 5 round-11 post-freeze registrations, never external
-#:       (kn_trigram_logprob_score, parquet_footer_scan,
-#:       orc_footer_scan, docx_text_extract, image_dhash_clusters);
-#:       (b) the 13 remaining last-r6 rows; (c) the 32 oldest
-#:       last-r7 rows, all in registration order. Done right, this
-#:       is the first round with 268/268 cumulative external
-#:       coverage. Registration is FROZEN for r12 as of this list:
-#:       any round-12 registration ships with a green local row
-#:       (CORRECTNESS_LOCAL_r12.json) and queues for r13.
-#:   r13 plan (precommitted): run `python tools/window_plan.py`
-#:       after CORRECTNESS_r12.json lands — the rule gives (a) any
-#:       round-12 post-freeze registrations first, (b) the last-r7
-#:       remainder, (c) remaining slots to the oldest r8 rows in
-#:       registration order. No hand counting: the tool's output IS
-#:       the plan; bump the max_round pin in
-#:       tests/test_registry_window.py to 12 when rotating.
-#:   r13 window (this list — executes the precommitted r13 plan,
-#:       generated by `python tools/window_plan.py` at max_round=12):
-#:       (a) the 4 round-12 post-freeze registrations, never external
-#:       (substring_dedup_spans, substring_dedup_cleaned_docs,
-#:       incremental_substring_dedup, charset_detection_scan);
-#:       (b) the 18 remaining last-r7 rows; (c) the 28 oldest
-#:       last-r8 rows, all in registration order. Done right, this
-#:       is the first round where cumulative external coverage equals
-#:       the full registry. Registration is FROZEN for r13 as of this
-#:       list: any round-13 registration ships with a green local row
-#:       (CORRECTNESS_LOCAL_r13.json) and queues for r14.
-#:   r14 window (this list — executes the precommitted r14 plan,
-#:       generated by `python tools/window_plan.py` at max_round=13):
-#:       (a) the 16 round-13 post-freeze registrations, never
-#:       external; (b) the 22 remaining last-r8 rows; (c) the 12
-#:       oldest last-r9 rows, all in registration order. No round-14
-#:       registrations (optimization round — registration frozen).
-#:   r15 plan (precommitted): run `python tools/window_plan.py`
-#:       after CORRECTNESS_r14.json lands — the rule gives the
-#:       remaining last-r9 rows first, then the oldest r10 rows in
-#:       registration order. Bump the max_round pin in
-#:       tests/test_registry_window.py to 14 when rotating.
-#:
-#: Round-13 post-freeze registrations (window already full → each
-#: ships with a driver-format row in CORRECTNESS_LOCAL_r13.json and
-#: queues for the r14 window): substring_dedup_spans_folded,
-#: xlsx_text_extract, pptx_text_extract, quality_classifier_weights,
-#: quality_classifier_scores, quality_classifier_report,
-#: quality_classifier_pr_curve, damerau_title_pairs,
-#: unicode_normalize_scan, eml_mime_text_extract, rtf_text_extract,
-#: kcore_trading_graph, contamination_containment_pairs,
-#: arrow_ipc_file_source, bm25_topk_retrieval, unigram_lm_train.
-#:
-#: Round-12 post-freeze registrations (window already full → each
-#: ships with a driver-format row in CORRECTNESS_LOCAL_r12.json and
-#: queues for the r13 window): substring_dedup_spans,
-#: substring_dedup_cleaned_docs, incremental_substring_dedup,
-#: charset_detection_scan.
-#:
-#: Round-11 post-freeze registrations (window already full → each
-#: ships with a driver-format row in CORRECTNESS_LOCAL_r11.json and
-#: queues for the r12 window): image_dhash_clusters,
-#: kn_trigram_logprob_score, docx_text_extract, parquet_footer_scan,
-#: orc_footer_scan.
-#:
-#: Round-4 post-freeze registrations (window already full → each
-#: ships with a driver-format row in CORRECTNESS_LOCAL_r4.json, and
-#: queues for the r5 window): truncate_bulk_load, doc_chunking,
-#: funding_rate_anomaly, snapshot_diff_ticks, heavy_hitter_users,
-#: event_type_correlation, reservoir_sample_by_source,
-#: dataset_mixture_plan, bpe_pair_counts, csv_file_source,
-#: orc_file_source, stream_anomaly_alerts, bpe_train_merges,
-#: ohlc_bars, cohort_retention, event_funnel, triangle_count,
-#: scd2_history, gap_fill_hourly, zorder_cluster_keys,
-#: frequent_tokens_sketch, rolling_beta, source_divergence_kl,
-#: rollup_cascade, stream_ohlc_bars, token_id_encoding,
-#: packed_training_batches, quality_filter_ablation,
-#: unigram_logprob_score, funnel_latency_quantiles,
-#: vocab_coverage_curve, missing_ticks_report, stream_heavy_hitters,
-#: incremental_dedup, robust_anomaly_mad, embedding_top_component,
-#: trend_regression, skew_diagnostics, stream_window_distinct_users,
-#: table_profile, ks_two_sample, weekly_churn,
-#: multi_touch_attribution, simhash_distance_histogram,
-#: dedup_savings_report, hourly_activity_heatmap, value_histogram.
+#: checks only the FIRST 50 entries of queries(), so this order decides
+#: which queries get an external correctness row in a round. Rotation
+#: rule: never-external queries first (registration order), then every
+#: other query by the round of its most recent external row, oldest
+#: first (ties by registration order); take 50. Queries registered
+#: after the window froze queue for the next one and ship with a local
+#: row from tools/local_correctness.py. The list is GENERATED by
+#: `python tools/window_plan.py`; tests/test_registry_window.py pins it
+#: to the rule at a fixed artifact round.
 _PRIORITY: list[str] = [
-    # r14 window — generated by `python tools/window_plan.py`
-    # (max_round=13); see the rotation docstring above and
-    # tests/test_registry_window.py which pins this list to the rule.
-    # Cohorts: the 16 round-13 post-freeze registrations first
-    # (never-external), then the 22 remaining last-r8 rows, then
-    # the 12 oldest last-r9 rows.
-    "damerau_title_pairs",
-    "unigram_lm_train",
-    "arrow_ipc_file_source",
-    "xlsx_text_extract",
-    "pptx_text_extract",
-    "eml_mime_text_extract",
-    "rtf_text_extract",
-    "substring_dedup_spans_folded",
-    "contamination_containment_pairs",
-    "bm25_topk_retrieval",
-    "kcore_trading_graph",
-    "quality_classifier_weights",
-    "quality_classifier_scores",
-    "quality_classifier_report",
-    "quality_classifier_pr_curve",
-    "unicode_normalize_scan",
-    "spot_pairs_snapshot",
-    "lending_pipeline",
-    "multimodal_gif_roundtrip",
-    "multimodal_resize_real",
-    "multimodal_jpeg_roundtrip",
-    "multimodal_mjpg_framesample",
-    "multimodal_adpcm_roundtrip",
-    "image_dhash_index",
-    "funding_stats",
-    "sql_funding_stats",
-    "ann_index_incremental",
-    "stream_upsert_rates",
-    "stream_tumbling_rollup",
-    "stream_lending_append",
-    "stream_ewma_stateful",
-    "stream_funding_pipeline",
-    "stream_stream_join_attribution",
-    "stream_session_windows",
-    "trailing_time_features",
-    "stream_merge_on_read",
-    "hashed_ngram_quality_score",
-    "tpch_q8_market_share",
-    "funding_rate_anomaly",
-    "snapshot_diff_ticks",
-    "heavy_hitter_users",
-    "filter_equality",
-    "filter_time_range",
-    "group_min",
-    "value_percentiles",
-    "rollup_totals",
-    "distinct_values",
-    "existence_probe",
-    "broadcast_join_dim",
-    "semi_join_universe",
+    # r15 window (max_round=14): the 38 oldest last-r9 rows, then the
+    # 12 oldest last-r10 rows.
+    "sort_limit",
+    "topk_per_group",
+    "union_append",
+    "jsonl_file_source",
+    "tsv_file_source",
+    "cdc_materialize",
+    "event_transition_matrix",
+    "cap_per_source",
+    "snapshot_bloom_pruned_read_str",
+    "paged_backfill",
+    "main_dag_parity",
+    "multimodal_png_variants_roundtrip",
+    "multimodal_wav_roundtrip",
+    "multimodal_flac_roundtrip",
+    "multimodal_avi_framesample",
+    "multimodal_jpeg420_roundtrip",
+    "multimodal_jpeg_progressive_roundtrip",
+    "multimodal_mp3_frame_scan",
+    "hash_sample_documents",
+    "stratified_sample_by_lang",
+    "ann_cosine_topk",
+    "ann_cosine_topk_lsh",
+    "ann_cosine_topk_scale",
+    "ann_cosine_topk_ivf",
+    "embedding_near_dup",
+    "ann_cosine_topk_ivf_kmeans",
+    "asof_join_backward",
+    "sessionize_events",
+    "session_window_agg",
+    "interval_join_attribution",
+    "asof_join_forward",
+    "window_distribution_suite",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q9_profit_by_nation_year",
+    "tpch_q11_important_parts",
+    "tpch_q16_supplier_variety",
+    "tpch_q20_excess_suppliers",
+    "tpch_q21_waiting_suppliers",
+    "event_type_correlation",
+    "reservoir_sample_by_source",
+    "dataset_mixture_plan",
+    "bpe_train_merges",
+    "bpe_pair_counts",
+    "ohlc_bars",
+    "cohort_retention",
+    "event_funnel",
+    "triangle_count",
+    "zorder_cluster_keys",
+    "frequent_tokens_sketch",
+    "rolling_beta",
 ]
-# ^ exactly 50 entries. After this round every query in the registry
-# has had at least one green external row (the 4 round-12 post-freeze
-# registrations were the only never-external rows) — cumulative
-# external coverage reaches the full registry. The number is
-# GENERATED, never hand-written here: run
-# `python tools/coverage_stats.py` — it unions CORRECTNESS_r*.json
-# and prints ever-green / registry-size per round. The remaining
-# last-r8 rows roll to r14 per the rotation rule in the docstring
-# above, and every query NOT in this window gets a same-format local
-# row in CORRECTNESS_LOCAL_r13.json (tools/local_correctness.py), so
-# nothing ships on pytest evidence alone.
 
 
 def _ordered(d: dict) -> dict:

@@ -24,6 +24,5 @@ from funding_monitoring_spark.streaming.replay import (  # noqa: F401
 )
 from funding_monitoring_spark.streaming.sinks import (  # noqa: F401
     atomic_overwrite,
-    snapshot_writer,
     upsert_writer,
 )

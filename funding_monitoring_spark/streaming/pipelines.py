@@ -24,6 +24,7 @@ from funding_monitoring_spark.pipeline.funding_stats import (
     funding_stats_from_rates,
     rates_from_events,
 )
+from funding_monitoring_spark.plans.inspect import conf_override
 from funding_monitoring_spark.streaming.replay import stream_from_chunks
 from funding_monitoring_spark.streaming.sinks import (
     atomic_overwrite,
@@ -1555,12 +1556,8 @@ def replay_pipeline_from_chunks(
         raise ValueError(f"unknown pipeline {pipeline!r}")
     run, subdir, read = _PIPELINES[pipeline]
     store = os.path.join(workdir, subdir)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
+    with conf_override(
+        spark, "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
+    ):
         run(spark, chunks_dir, schema, store, os.path.join(workdir, "checkpoint"))
         return read(spark, store)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

@@ -114,12 +114,11 @@ def stream_from_chunks(
     spark: SparkSession,
     chunks_dir: str,
     schema: T.StructType,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """File-source stream over a chunk directory: one chunk per
-    micro-batch = one reference tick per trigger."""
+    """File-source stream over a chunk directory, read one chunk file
+    per micro-batch: one reference tick per trigger."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(chunks_dir)
     )

@@ -25,7 +25,11 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from funding_monitoring_spark.operators.upsert import dedupe_batch, upsert
+from funding_monitoring_spark.operators.upsert import (
+    cdc_materialize,
+    dedupe_batch,
+    upsert,
+)
 
 
 def atomic_overwrite(
@@ -112,7 +116,6 @@ def upsert_writer(
     store_path: str,
     key_cols: Sequence[str],
     order_cols: Sequence[str],
-    transform: Callable[[DataFrame], DataFrame] | None = None,
     on_batch_complete: Callable[[DataFrame], None] | None = None,
     seq_col: str | None = None,
     check_empty: bool = True,
@@ -133,7 +136,6 @@ def upsert_writer(
     order_cols. Replays re-run under their original batch id
     (checkpoint offsets), so retries merge idempotently.
 
-    transform: optional shaping applied to the raw micro-batch first.
     on_batch_complete: hook called with the post-merge store DataFrame
     (used by the funding pipeline to recompute its per-tick snapshot).
     check_empty: probe each micro-batch for emptiness and skip the
@@ -153,7 +155,7 @@ def upsert_writer(
         # store is unchanged by an empty merge, so skip the two jobs.
         if check_empty and os.path.exists(store_path) and batch_df.isEmpty():
             return
-        batch = transform(batch_df) if transform is not None else batch_df
+        batch = batch_df
         if seq_col is not None:
             batch = batch.withColumn(seq_col, F.lit(batch_id))
         # the deduped batch is scanned three times by the ordered merge
@@ -182,7 +184,6 @@ def delta_append_writer(
     key_cols: Sequence[str],
     order_cols: Sequence[str],
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    check_empty: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch writer for MERGE-ON-READ stores: each micro-batch
     writes ONLY its own (within-batch deduped) rows into an
@@ -201,7 +202,7 @@ def delta_append_writer(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         # stateful upstreams make availableNow run one final EMPTY
         # batch purely to advance the watermark — nothing to append
-        if check_empty and batch_df.isEmpty():
+        if batch_df.isEmpty():
             return
         batch = transform(batch_df) if transform is not None else batch_df
         batch = dedupe_batch(batch, key_cols, order_cols)
@@ -251,20 +252,6 @@ def read_merged_store(
     ).drop("batch_id")
 
 
-def snapshot_writer(
-    store_path: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch writer with snapshot-replace semantics (K3/K4): each
-    tick fully rewrites the store from the batch."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch = transform(batch_df) if transform is not None else batch_df
-        atomic_overwrite(batch, store_path)
-
-    return write
-
-
 def cdc_writer(
     store_path: str,
     key_cols: Sequence[str],
@@ -272,8 +259,8 @@ def cdc_writer(
     run_id: str = "default",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch CDC compactor: per batch, the max-order change per
-    key wins (one map-side-combinable max_by aggregation, like
-    operators/upsert.cdc_materialize); the store then merges it with
+    key wins (operators/upsert.cdc_materialize, one map-side-combinable
+    max_by aggregation); the store then merges it with
     per-key change-count accumulation. Tombstones are KEPT in the
     store — a delete is a row like any other, so a later re-insert of
     the key still accumulates its full change history; readers filter
@@ -324,10 +311,8 @@ def cdc_writer(
         spark = batch_df.sparkSession
         order_key = F.struct(*[F.col(c) for c in order_cols])
         value_cols = [c for c in batch_df.columns if c not in key_cols]
-        latest = batch_df.groupBy(*key_cols).agg(
-            *[F.max_by(F.col(c), order_key).alias(c) for c in value_cols],
-            F.count("*").alias("__batch_changes"),
-        )
+        # tombstones stay in the store, so no change row is a delete
+        latest = cdc_materialize(batch_df, key_cols, order_cols, F.lit(False))
         if os.path.exists(store_path):
             store = spark.read.parquet(store_path)
             batch_keys = F.broadcast(
@@ -359,12 +344,12 @@ def cdc_writer(
                 ],
                 (
                     F.coalesce(F.col("__prev_changes"), F.lit(0))
-                    + F.col("__batch_changes")
+                    + F.col("n_changes")
                 ).alias("n_changes"),
             )
             out = survivors.unionByName(merged)
         else:
-            out = latest.withColumnRenamed("__batch_changes", "n_changes")
+            out = latest
         atomic_overwrite(
             out,
             store_path,

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from funding_monitoring_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    _spread_ids,
     fused_map,
     register_module_by_value,
 )
@@ -30,6 +29,7 @@ from funding_monitoring_spark.operators.textstats import (
     POLY_MOD,
     POLY_MULT,
 )
+from funding_monitoring_spark.plans.inspect import spread_to_parallelism
 from funding_monitoring_spark.registry import query
 from funding_monitoring_spark.sources.tables import load_table
 
@@ -86,7 +86,7 @@ def _doc_media(docs: DataFrame, build) -> DataFrame:
                 }
             )
 
-    ids = _spread_ids(
+    ids = spread_to_parallelism(
         docs.select(
             F.col("doc_id").alias("media_id"), "text", "lang", "source"
         )

@@ -896,7 +896,6 @@ def q_jpeg_exif_scan(spark, sf_dir):
     size — the shape that makes metadata profiling of a 100 TB image
     corpus cheap. All fields are closed-form in the oracle."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from funding_monitoring_spark.operators.jpegcodec import (
         encode_baseline_jpeg,
@@ -905,8 +904,7 @@ def q_jpeg_exif_scan(spark, sf_dir):
         EXIF_FEATURE_SCHEMA,
         _bmp_dims,
         _bmp_pixels,
-        _spread_ids,
-        MEDIA_SCHEMA,
+        _synth_from_ids,
         extract_jpeg_exif,
         inject_jpeg_exif,
         register_module_by_value,
@@ -973,8 +971,7 @@ def q_jpeg_exif_scan(spark, sf_dir):
             yield pd.DataFrame(rows)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    ids = _spread_ids(docs.select(F.col("doc_id").alias("media_id")))
-    media = fused_map(ids, synth, MEDIA_SCHEMA)
+    media = _synth_from_ids(docs, "doc_id", synth)
     return fused_map(media, scan, EXIF_FEATURE_SCHEMA)
 
 
@@ -1411,12 +1408,10 @@ def q_mp3_id3_scan(spark, sf_dir):
     (operators/mpegaudio.py build_id3v2_frames /
     parse_id3v2_frames)."""
     import pandas as pd
-    from pyspark.sql import functions as F
     import pyspark.sql.types as T
 
     from funding_monitoring_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _spread_ids,
+        _synth_from_ids,
         register_module_by_value,
     )
 
@@ -1510,8 +1505,7 @@ def q_mp3_id3_scan(spark, sf_dir):
             yield pd.DataFrame(rows)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    ids = _spread_ids(docs.select(F.col("doc_id").alias("media_id")))
-    media = fused_map(ids, synth, MEDIA_SCHEMA)
+    media = _synth_from_ids(docs, "doc_id", synth)
     return fused_map(media, scan, schema)
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from funding_monitoring_spark import registry
@@ -117,6 +118,57 @@ def test_plan_inspection_helpers(spark, sf_dir):
     assert count_exchanges(q1) == 1
     assert any("l_shipdate" in f for f in pushed_filters(q1))
     assert {"l_returnflag", "l_linestatus"} <= read_schema_columns(q1)[0]
+
+
+def test_scan_size_bytes_reads_catalyst_estimate(spark, sf_dir):
+    """The private optimizedPlan().stats() path must answer: if it
+    raised, the helper would return its 1<<62 fallback and PMI would
+    silently switch to always-persist."""
+    from funding_monitoring_spark.plans import scan_size_bytes
+
+    size = scan_size_bytes(load_table(spark, sf_dir, "documents"))
+    assert 0 < size < 1 << 62, size
+
+
+def test_spread_to_parallelism_only_spreads_underpartitioned(spark, sf_dir):
+    from funding_monitoring_spark.plans import spread_to_parallelism
+
+    parallelism = spark.sparkContext.defaultParallelism
+    one_file = load_table(spark, sf_dir, "documents").select("doc_id")
+    assert one_file.rdd.getNumPartitions() == 1
+    spread = spread_to_parallelism(one_file)
+    assert spread.rdd.getNumPartitions() == parallelism
+    assert spread.count() == one_file.count()
+    wide = spark.range(0, 100, numPartitions=parallelism)
+    assert spread_to_parallelism(wide) is wide
+
+
+def test_conf_override_restores_or_unsets(spark):
+    from funding_monitoring_spark.plans import conf_override
+
+    set_key = "spark.funding_monitoring.test.set_key"
+    unset_key = "spark.funding_monitoring.test.unset_key"
+
+    def body(raises: bool) -> None:
+        with conf_override(spark, set_key, "during"), conf_override(
+            spark, unset_key, "during"
+        ):
+            assert spark.conf.get(set_key) == "during"
+            assert spark.conf.get(unset_key) == "during"
+            if raises:
+                raise RuntimeError("body failed")
+
+    spark.conf.set(set_key, "before")
+    try:
+        body(raises=False)
+        assert spark.conf.get(set_key) == "before"
+        assert spark.conf.get(unset_key, None) is None
+        with pytest.raises(RuntimeError):
+            body(raises=True)
+        assert spark.conf.get(set_key) == "before"
+        assert spark.conf.get(unset_key, None) is None
+    finally:
+        spark.conf.unset(set_key)
 
 
 def test_q19_or_predicate_residues_push_below_join(spark, sf_dir):

@@ -27,7 +27,7 @@ from window_plan import compute_plan  # noqa: E402
 
 from funding_monitoring_spark import registry  # noqa: E402
 
-PINNED_ROUND = 13  # artifacts CORRECTNESS_r01..r13 produced this window
+PINNED_ROUND = 14  # artifacts CORRECTNESS_r01..r14 produced this window
 
 
 def test_priority_matches_generated_plan():
